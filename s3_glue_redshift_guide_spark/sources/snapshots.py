@@ -46,7 +46,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -384,6 +387,26 @@ LOG_METRICS = {
 #: block), and a single total hides which staged pass dominates.
 #: Reset at each merge entry; read by bench.py's tf_merge_mor_phases.
 MERGE_METRICS: dict[str, float] = {}
+
+
+@contextmanager
+def _merge_phase(key: str):
+    """Time the enclosed ``merge_mor`` phase into ``MERGE_METRICS[key]``
+    (seconds, ms resolution). A phase that raises records nothing."""
+    t0 = time.perf_counter()
+    yield
+    MERGE_METRICS[key] = round(time.perf_counter() - t0, 3)
+
+
+def _clause_filter(flag):
+    """A MERGE clause switch — ``None``/``False`` (off), ``True``
+    (unconditional) or a boolean Column condition — as ``None`` (off)
+    or a null-safe filter Column. Truthiness on a Column raises, so
+    each switch normalises once, here, instead of identity checks at
+    every use."""
+    if flag is None or flag is False:
+        return None
+    return F.lit(True) if flag is True else flag.eqNullSafe(F.lit(True))
 
 
 def _pointer_path(root: str) -> str:
@@ -1193,6 +1216,10 @@ def encode_partition_value(val) -> str | None:
 #: every user-facing read; surfaced as ``_row_id`` on request.
 ROW_ID_COL = "__row_id"
 
+#: The (file, row position) provenance a DML scan tags each row with —
+#: the pair a deletion-vector tombstone records.
+_PROVENANCE = ("__fp", "__pos")
+
 #: distinct "not passed" sentinel for _publish's metadata overrides:
 #: ``None`` is a MEANINGFUL value for the schema map (= table uses
 #: physical names) and restore/clone must be able to publish it
@@ -1862,6 +1889,82 @@ class SnapshotTable:
         ]
         return [z_value_n(normed)]
 
+    def _cluster_layout(
+        self,
+        m: dict,
+        df: DataFrame,
+        cluster_by: tuple[str, ...] | None = None,
+        n_files: int | None = None,
+    ) -> tuple[DataFrame, list | None, tuple[str, ...] | None]:
+        """Liquid-clustering write layout: ``cluster_by``, else the
+        table's ``cluster.by`` property, makes the write lay itself out
+        along the declared Morton key — callers don't opt in
+        write-by-write, the table declares it once. Returns ``(df,
+        order_within, clustered columns)``, ``(df, None, None)`` when
+        the write is unclustered. Each output file owns a contiguous
+        curve segment: ``df`` is range-partitioned on the key into
+        ``n_files`` partitions (default: its current partition count),
+        then the partition-local sort in ``_write_files`` tightens zone
+        maps inside each file. Under a partition spec the spec
+        repartition decides file membership and the key rides as the
+        write-time sort only (the OPTIMIZE ZORDER composition rule)."""
+        cols = cluster_by
+        if cols is None:
+            cb = (m.get("properties") or {}).get("cluster.by")
+            if not cb:
+                return df, None, None
+            cols = tuple(
+                c.strip() for c in str(cb).split(",") if c.strip()
+            )
+            if not 2 <= len(cols) <= 4:
+                # SET TBLPROPERTIES can bypass the CLUSTER BY arity
+                # check — failing silently here would drop the declared
+                # layout on every subsequent write. >4 is rejected on
+                # the bit budget: the interleave gives each column
+                # floor(63/N) bits, and below ~12 bits/column (N=5)
+                # zone-map ranges get too coarse to prune — the same
+                # practical cap Delta docs put on ZORDER column counts
+                raise ValueError(
+                    "table property cluster.by must name 2-4 "
+                    f"comma-separated columns, got {cb!r}"
+                )
+        order_within = self._z_order_within(df, *cols)
+        if order_within and not self._partition_spec():
+            # the explicit partition count pins the parallelism — AQE
+            # would otherwise coalesce a small batch to one file and
+            # erase the clustering
+            df = df.repartitionByRange(
+                n_files or max(1, df.rdd.getNumPartitions()),
+                *order_within,
+            )
+        return df, order_within, cols
+
+    @staticmethod
+    def _assign_identity(df: DataFrame, identity: dict) -> DataFrame:
+        """GENERATED ALWAYS AS IDENTITY on a write batch: the batch must
+        omit every identity column, and each gets ``high + step*(1 +
+        monotonically_increasing_id())`` from the watermark in
+        ``identity`` (col -> {step, high}). ``add_identity_column``
+        banks ``high = start - step``, so the first id may equal
+        ``start`` (Delta's START WITH). One map-side expression: no
+        shuffle, no extra job; ids are unique, with gaps between
+        partitions."""
+        for c, meta in identity.items():
+            if c in df.columns:
+                raise ValueError(
+                    f"{c!r} is GENERATED ALWAYS AS IDENTITY — the "
+                    "engine assigns it; omit the column"
+                )
+            step = int(meta["step"])
+            df = df.withColumn(
+                c,
+                (
+                    F.lit(int(meta["high"]) + step)
+                    + F.lit(step) * F.monotonically_increasing_id()
+                ).cast("long"),
+            )
+        return df
+
     def commit_append(
         self,
         df: DataFrame,
@@ -1887,7 +1990,7 @@ class SnapshotTable:
             if cur0 > 0
             else {}
         ).get("bucket.by")
-        ident_at_write: dict[str, int] | None = None
+        ident_at_write: dict[str, int] = {}
         for _ in range(5):
             cur = self.current_version()
             m = (
@@ -1895,43 +1998,27 @@ class SnapshotTable:
                 if cur > 0
                 else {"files": [], "schema": None}
             )
-            # identity columns (GENERATED ALWAYS): the batch must omit
-            # them; values are assigned from the head's high-water mark
-            # read under THIS manifest. If a concurrent writer advanced
-            # any watermark between our write and the retry, the ids
-            # baked into our staged files may collide with theirs —
-            # that is a real conflict (the one append/append race that
-            # cannot auto-resolve), so fail and let the caller rewrite.
+            # identity columns (GENERATED ALWAYS): values are assigned
+            # from the head's high-water mark read under THIS manifest.
+            # If a concurrent writer advanced any watermark between our
+            # write and the retry, the ids baked into our staged files
+            # may collide with theirs — that is a real conflict (the
+            # one append/append race that cannot auto-resolve), so fail
+            # and let the caller rewrite.
+            head_ident = m.get("identity") or {}
             if new is None:
                 self._enforce_schema(m, df)
-            head_ident = m.get("identity") or {}
-            if new is None and head_ident:
                 ident_at_write = {
                     c: int(v["high"]) for c, v in head_ident.items()
                 }
-                for c, meta in head_ident.items():
-                    if c in df.columns:
-                        raise ValueError(
-                            f"{c!r} is GENERATED ALWAYS AS IDENTITY — "
-                            "the engine assigns it; omit the column"
-                        )
-                    step = int(meta["step"])
-                    df = df.withColumn(
-                        c,
-                        (
-                            F.lit(int(meta["high"]) + step)
-                            + F.lit(step)
-                            * F.monotonically_increasing_id()
-                        ).cast("long"),
-                    )
-            elif new is not None and head_ident:
+                df = self._assign_identity(df, head_ident)
+            elif head_ident:
                 # a spec registered concurrently (staged files lack the
                 # column entirely) conflicts just like a moved watermark
                 moved = {
                     c
                     for c, v in head_ident.items()
-                    if int(v["high"])
-                    != (ident_at_write or {}).get(c)
+                    if int(v["high"]) != ident_at_write.get(c)
                 }
                 if moved:
                     raise CommitConflict(
@@ -1992,35 +2079,10 @@ class SnapshotTable:
                         "retry (they will be skipped)"
                     )
             if new is None:
-                order_within = None
-                eff_cluster = cluster_by
-                if eff_cluster is None:
-                    # liquid-clustering posture: the `cluster.by`
-                    # table property makes EVERY append lay itself out
-                    # along the declared Morton key — callers don't
-                    # opt in write-by-write, the table declares it once
-                    cb = (m.get("properties") or {}).get("cluster.by")
-                    if cb:
-                        cb_cols = [
-                            c.strip() for c in cb.split(",") if c.strip()
-                        ]
-                        if not 2 <= len(cb_cols) <= 4:
-                            # SET TBLPROPERTIES can bypass the CLUSTER
-                            # BY arity check — failing silently here
-                            # would drop the declared layout on every
-                            # subsequent append. >4 is rejected on the
-                            # bit budget: the interleave gives each
-                            # column floor(63/N) bits, and below ~12
-                            # bits/column (N=5) zone-map ranges get too
-                            # coarse to prune — the same practical cap
-                            # Delta docs put on ZORDER column counts
-                            raise ValueError(
-                                "table property cluster.by must name "
-                                f"2-4 comma-separated columns, got "
-                                f"{cb!r}"
-                            )
-                        eff_cluster = tuple(cb_cols)
-                if eff_cluster is not None:
+                df, order_within, clustered = self._cluster_layout(
+                    m, df, cluster_by
+                )
+                if clustered is not None:
                     # clustering exists to FEED zone maps: bank footer
                     # stats for every clustered column automatically
                     # (Delta banks stats on ZORDER columns the same
@@ -2028,27 +2090,8 @@ class SnapshotTable:
                     # surface would lay out the curve and then prune
                     # nothing
                     stats_cols = sorted(
-                        set(stats_cols or []) | set(eff_cluster)
+                        set(stats_cols or []) | set(clustered)
                     )
-                    order_within = self._z_order_within(
-                        df, *eff_cluster
-                    )
-                    if order_within and not self._partition_spec():
-                        # each file owns a contiguous curve segment:
-                        # range-partition on the key, then the
-                        # partition-local sort in _write_files tightens
-                        # zone maps inside each file. Under a partition
-                        # spec the spec repartition decides file
-                        # membership and the key rides as the
-                        # write-time sort only (the OPTIMIZE ZORDER
-                        # composition rule). The explicit partition
-                        # count pins the incoming parallelism — AQE
-                        # would otherwise coalesce a small batch to one
-                        # file and erase the clustering
-                        df = df.repartitionByRange(
-                            max(1, df.rdd.getNumPartitions()),
-                            *order_within,
-                        )
                 new = self._write_files(df, order_within=order_within)
             # registered bloom indexes extend to the new files (built
             # once; re-merged against the fresh head on each retry)
@@ -2410,6 +2453,100 @@ class SnapshotTable:
             "5 consecutive manifest conflicts — giving up"
         )
 
+    # -------------------------------------------- merge-on-read DML core
+    # delete_where / update_where / replace_where / merge_mor are clause
+    # logic over these helpers: one tagged scan, one tombstone writer,
+    # one post-image builder (plus _assign_identity for inserts), and
+    # _publish_with_rebase as the one publish path.
+    def _tagged_scan(
+        self, m: dict, files: list[str] | None = None
+    ) -> DataFrame:
+        """The DML read of ``files`` (default: every live file of
+        manifest ``m``): DV-masked, schema-mapped onto the current
+        logical names, each row tagged in front with its ``__fp`` /
+        ``__pos`` provenance — the (file, position) pair a tombstone
+        records, taken from the free ``_metadata`` columns, no scan
+        widening. Under row tracking a physically-carried ``__row_id``
+        rides along, so post-images keep their permanent ids."""
+        rows = self._masked_read(
+            m["files"] if files is None else files,
+            m["dv"],
+            keep_provenance=True,
+            manifest=m,
+        )
+        keep = _PROVENANCE
+        if m.get("row_tracking") and ROW_ID_COL in rows.columns:
+            keep += (ROW_ID_COL,)
+        return self._apply_schema_map(rows, m["schema"], keep=keep)
+
+    @staticmethod
+    def _target_cols(tagged: DataFrame) -> list[str]:
+        """The logical table columns of a ``_tagged_scan`` frame."""
+        return [
+            c for c in tagged.columns
+            if c not in (*_PROVENANCE, ROW_ID_COL)
+        ]
+
+    @staticmethod
+    def _distinct_files(df: DataFrame, col: str = "__fp") -> list[str]:
+        """The distinct data files named by ``df[col]`` — one job,
+        metadata-scale result (bounded by the table's file count)."""
+        return [r[0] for r in df.select(col).distinct().collect()]
+
+    def _stage_tombstones(
+        self, tomb: DataFrame | None, affected: list[str] | None = None
+    ) -> tuple[str | None, list[str]]:
+        """Write the deletion-vector sidecar for the ``__fp``/``__pos``
+        rows of ``tomb``; returns ``(sidecar dir, affected files)``. The
+        sidecar is a parquet directory of ``(__dv_file, __dv_pos)``
+        pairs — the on-disk format ``_dv_rows`` and the connector read.
+        ``affected`` is the distinct-file set when the caller already
+        pinned ``tomb`` and knows it; an empty set skips the write job
+        (``tomb`` may then be None: no tombstone clause ran).
+        Otherwise the written sidecar is ``tomb``'s one evaluation and
+        the set is read back from it. Either way a DML call that
+        tombstones nothing stages no sidecar: ``(None, [])``."""
+        if affected is not None and not affected:
+            return None, []
+        dvdir = os.path.join(self.root, "deletes", uuid.uuid4().hex)
+        tomb.select(
+            F.col("__fp").alias("__dv_file"),
+            F.col("__pos").alias("__dv_pos"),
+        ).write.mode("errorifexists").parquet(dvdir)
+        if affected is None:
+            affected = self._distinct_files(
+                self.spark.read.parquet(dvdir), "__dv_file"
+            )
+            if not affected:
+                shutil.rmtree(dvdir, ignore_errors=True)
+                return None, []
+        return dvdir, affected
+
+    def _post_images(
+        self,
+        pre: DataFrame,
+        m: dict,
+        assignments: dict,
+        cols: list[str],
+    ) -> DataFrame:
+        """UPDATE post-images of the pinned tagged rows ``pre``:
+        ``assignments`` ({column: Column expression}) applied, projected
+        onto ``cols``. GENERATED columns an assignment didn't explicitly
+        set are DROPPED so the write path recomputes them from the
+        updated inputs (Delta's UPDATE semantics) — keeping the stale
+        value would trip the writer-side ``<=>`` validation and reject
+        a legitimate update; an assignment that targets the generated
+        column itself stays and is validated as usual. Under row
+        tracking the post-image KEEPS the pre-image's permanent id —
+        an UPDATE changes a row's values, not its identity."""
+        if m.get("row_tracking"):
+            pre = self._attach_row_ids(pre, m, ROW_ID_COL)
+            cols = [*cols, ROW_ID_COL]
+        regen = set(m.get("generated") or {}) - set(assignments)
+        return pre.withColumns(assignments).select(
+            *[c for c in cols if c not in regen]
+        )
+
     def delete_where(self, predicate) -> int:
         """DELETE as a DELETION-VECTOR commit (merge-on-read): data files
         stay byte-identical; the commit writes one sidecar of (file,
@@ -2425,39 +2562,18 @@ class SnapshotTable:
         commit. History stays intact: version N-1 still reads the rows.
         ``materialize_deletes`` / OPTIMIZE folds DVs into rewrites when
         tombstones accumulate."""
-        import uuid as _uuid
-
         cur = self.current_version()
         m = load_manifest(self.root, cur)
         if not m["files"]:
             return cur
-        visible = self._masked_read(m["files"], m["dv"], manifest=m)
-        tagged = visible.withColumns(
-            {
-                "__dv_file": self._plain_path(
-                    F.col("_metadata.file_path")
-                ),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
-        )
-        mapped = self._apply_schema_map(
-            tagged, m["schema"], keep=("__dv_file", "__dv_pos")
-        )
-        matched = mapped.filter(predicate).select("__dv_file", "__dv_pos")
-        dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
         # NATURAL task parallelism for the sidecar write: a wide delete
         # (50% selectivity) streams positions out of every scan task in
         # parallel instead of funnelling millions of rows through one
         # coalesced task; a point delete writes a few KB-sized shards —
         # sidecar readers union the directory either way.
-        matched.write.mode("errorifexists").parquet(dvdir)
-        affected = [
-            r["__dv_file"]
-            for r in self.spark.read.parquet(dvdir)
-            .select("__dv_file")
-            .distinct()
-            .collect()
-        ]
+        dvdir, affected = self._stage_tombstones(
+            self._tagged_scan(m).filter(predicate)
+        )
         if not affected:
             return cur  # nothing matched: no commit
         # publish with WRITE-SERIALIZABLE rebase: a concurrent pure
@@ -2478,95 +2594,29 @@ class SnapshotTable:
         a write of the matched rows only — copy-on-write would rewrite
         every touched FILE in full. History keeps the pre-images
         (time travel + CDF report the delete/insert pair)."""
-        import uuid as _uuid
-
         cur = self.current_version()
         m = load_manifest(self.root, cur)
         if not m["files"]:
             return cur
-        track = bool(m.get("row_tracking"))
-        visible = self._masked_read(
-            m["files"], m["dv"], keep_provenance=track, manifest=m
-        )
-        if track:
-            # keep only the physical __row_id; the (file, pos) pair is
-            # re-derived below under the __dv_ names this path uses
-            visible = visible.drop("__fp", "__pos")
-        tagged = visible.withColumns(
-            {
-                "__dv_file": self._plain_path(
-                    F.col("_metadata.file_path")
-                ),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
-        )
-        keep = ("__dv_file", "__dv_pos") + (
-            (ROW_ID_COL,)
-            if track and ROW_ID_COL in tagged.columns
-            else ()
-        )
-        mapped = self._apply_schema_map(tagged, m["schema"], keep=keep)
         # The matched rows MATERIALIZE once (localCheckpoint, O(matched)
         # storage): the tombstone sidecar AND the post-images both
         # derive from this one frame, so the predicate evaluates exactly
         # once — a nondeterministic predicate (sampling, rand()-derived)
-        # can no longer tombstone one row-set and insert post-images of
-        # a different one (the pre-r8 pinning re-joined the table
-        # against the written sidecar: same guarantee, but the touched
-        # files were read twice).
-        matched = mapped.filter(predicate).localCheckpoint(eager=True)
-        dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
-        matched.select("__dv_file", "__dv_pos").write.mode(
-            "errorifexists"
-        ).parquet(dvdir)
-        affected = [
-            r["__dv_file"]
-            for r in self.spark.read.parquet(dvdir)
-            .select("__dv_file")
-            .distinct()
-            .collect()
-        ]
+        # cannot tombstone one row-set and insert post-images of a
+        # different one, and the touched files are read once.
+        matched = self._tagged_scan(m).filter(predicate).localCheckpoint(
+            eager=True
+        )
+        dvdir, affected = self._stage_tombstones(
+            matched, self._distinct_files(matched)
+        )
         if not affected:
             return cur  # nothing matched
-        pinned = matched
-        if track:
-            # row tracking: the post-image KEEPS the pre-image's
-            # permanent id (physical __row_id if an earlier rewrite
-            # materialized one, else the file's banked base + position)
-            # — an UPDATE changes a row's values, not its identity
-            bases = self._row_id_bases(m).withColumnRenamed(
-                "__fp", "__dv_file"
-            )
-            pinned = pinned.join(
-                F.broadcast(bases), "__dv_file", "left"
-            )
-            fresh = (
-                F.col("__rid_base") + F.col("__dv_pos")
-            ).cast("long")
-            idc = (
-                F.coalesce(F.col(ROW_ID_COL).cast("long"), fresh)
-                if ROW_ID_COL in pinned.columns
-                else fresh
-            )
-            pinned = pinned.withColumn(ROW_ID_COL, idc).drop(
-                "__rid_base"
-            )
-        post = pinned.drop("__dv_file", "__dv_pos").withColumns(
-            assignments
+        cols = self._target_cols(matched)
+        post = self._post_images(
+            matched, m, assignments,
+            cols + [c for c in assignments if c not in cols],
         )
-        # GENERATED columns an assignment didn't explicitly set are
-        # DROPPED from the post-image so the write path recomputes them
-        # from the updated inputs (Delta's UPDATE semantics) — keeping
-        # the stale value would trip the writer-side `<=>` validation
-        # and reject a legitimate update. An assignment that targets the
-        # generated column itself stays, and is validated as usual.
-        regen = [
-            g
-            for g in self._generated()
-            if g in post.columns and g not in assignments
-        ]
-        if regen:
-            post = post.drop(*regen)
         new = self._write_files(post)
         # the same write-serializable rebase as delete_where: the
         # update's tombstones + post-images publish on top of a
@@ -2620,8 +2670,6 @@ class SnapshotTable:
         re-materialization shape) never rewrites untouched files.
         Publishes through the write-serializable rebase: concurrent
         pure appends don't invalidate it."""
-        import uuid as _uuid
-
         cur = self.current_version()
         m = (
             load_manifest(self.root, cur)
@@ -2643,51 +2691,121 @@ class SnapshotTable:
                 "satisfy the predicate — the replacement must stay "
                 "inside the window it clears"
             )
-        affected: list[str] = []
-        dvdir = None
+        dvdir, affected = None, []
         if m["files"]:
-            visible = self._masked_read(m["files"], m["dv"], manifest=m)
-            tagged = visible.withColumns(
-                {
-                    "__dv_file": self._plain_path(
-                        F.col("_metadata.file_path")
-                    ),
-                    "__dv_pos": F.col("_metadata.row_index"),
-                }
-            )
-            mapped = self._apply_schema_map(
-                tagged, m["schema"], keep=("__dv_file", "__dv_pos")
-            )
             # pin once (update_where's posture): the tombstone set is
-            # decided exactly here; the sidecar writes only when rows
-            # actually matched — an empty replace window must not
-            # stage an orphan directory per call
+            # decided exactly here
             matched = (
-                mapped.filter(predicate)
-                .select("__dv_file", "__dv_pos")
+                self._tagged_scan(m)
+                .filter(predicate)
+                .select(*_PROVENANCE)
                 .localCheckpoint(eager=True)
             )
-            affected = [
-                r["__dv_file"]
-                for r in matched.select("__dv_file")
-                .distinct()
-                .collect()
-            ]
-            if affected:
-                dvdir = os.path.join(
-                    self.root, "deletes", _uuid.uuid4().hex
-                )
-                matched.write.mode("errorifexists").parquet(dvdir)
+            dvdir, affected = self._stage_tombstones(
+                matched, self._distinct_files(matched)
+            )
         new = self._write_files(df)
         return self._publish_with_rebase(
             m,
             cur,
             new,
-            dv_sidecar=dvdir if affected else None,
+            dv_sidecar=dvdir,
             affected=affected,
             schema_map=self._extend_schema_map(m, df),
             op="REPLACE WHERE",
             types=self._merged_types(m, df),
+        )
+
+    def _merge_candidates(
+        self, m: dict, src: DataFrame, on: list[str]
+    ) -> list[str]:
+        """Delta's MERGE file pruning: a file whose banked key range
+        cannot intersect the SOURCE's key hull provably holds no matched
+        row, no ambiguous key, and no key the insert anti-join could
+        collide with — it skips the staged scan entirely and rides the
+        manifest untouched. Absent stats keep their files (zone_prune
+        is conservative). A merge touching 0.1% of a 100 TB table reads
+        ~0.1% of it. Computing the hull costs one extra evaluation of
+        the source, so it runs only when some file banks stats for a
+        merge key (otherwise nothing can prune)."""
+        aliases = {
+            e["name"]: list(e.get("prior", []))
+            for e in m.get("schema") or []
+            if e["name"] in on
+        }
+        keys = set(on).union(*aliases.values())
+        if not any(k in st for st in m["stats"].values() for k in keys):
+            return m["files"]
+        hull = src.agg(
+            *[F.min(f"__src_{k}") for k in on],
+            *[F.max(f"__src_{k}") for k in on],
+        ).collect()[0]
+        bounds = {}
+        for i, k in enumerate(on):
+            lo = _json_scalar_value(hull[i])
+            hi = _json_scalar_value(hull[len(on) + i])
+            if lo is not None or hi is not None:
+                bounds[k] = (lo, hi)
+        if not bounds:
+            return m["files"]
+        # nothing can match: one arbitrary file keeps the frames
+        # non-degenerate (provably matchless — the joins yield nothing
+        # from it)
+        return (
+            zone_prune(m["files"], m["stats"], bounds, aliases)
+            or m["files"][:1]
+        )
+
+    def _merge_inserts(
+        self,
+        unmatched: DataFrame,
+        cols: list[str],
+        ins_filter,
+        m: dict,
+        target_fields: list = (),
+    ) -> DataFrame:
+        """MERGE's insert branch over the not-matched source rows
+        ``unmatched`` (``__src_<col>`` namespace): the WHEN NOT MATCHED
+        condition applied, the source ``cols`` restored to their names,
+        aligned to the target's logical schema, and identity ids drawn
+        from the head watermark (the same map-side expression as
+        ``commit_append``; a racing watermark advance conflicts this
+        merge's single exclusive publish — the retry re-reads). Target
+        columns the source omits surface as typed NULLs (the pre-merge
+        rows' types in ``target_fields``, not string-inferred) — EXCEPT
+        generated columns (stay absent so the write path computes them
+        from the aligned inputs instead of validating a NULL) and
+        DEFAULT columns (stay absent so the write path fills the
+        default — a MERGE INSERT omitting a defaulted column must get
+        the default, not a NULL)."""
+        ins = unmatched.filter(ins_filter).select(
+            *[F.col(f"__src_{c}").alias(c) for c in cols]
+        )
+        ident = m.get("identity") or {}
+        computed = (
+            set(m.get("generated") or {})
+            | set(m.get("defaults") or {})
+            | set(ident)
+        )
+        ins = ins.withColumns(
+            {
+                f.name: F.lit(None).cast(f.dataType)
+                for f in target_fields
+                if f.name not in ins.columns and f.name not in computed
+            }
+        )
+        return self._assign_identity(ins, ident)
+
+    def _merge_noop(self, m: dict, cur: int, txn_update) -> int:
+        """A MERGE with nothing to write makes no commit — unless it
+        carries an idempotence watermark, which must still advance
+        atomically (a replay would otherwise re-run forever on restart
+        loops)."""
+        if not txn_update:
+            return cur
+        return self._publish(
+            m["files"], cur, m.get("stats") or {},
+            txn_update=txn_update, op="MERGE",
         )
 
     def merge_mor(
@@ -2735,190 +2853,41 @@ class SnapshotTable:
         clause is present, a source with duplicate join keys against
         one target row is rejected (the Delta multiple-matches error):
         the merge would be ambiguous. Insert-only merges never raise —
-        matched rows are ignored whatever their multiplicity, exactly
-        Delta's semantics (r12; the pre-r12 insert-only guard was a
-        non-Delta extra scan).
-        Post-images/tombstones derive from the WRITTEN sidecar, the same
-        recompute-divergence pinning as ``update_where``."""
-        import uuid as _uuid
-
+        matched rows are ignored whatever their multiplicity, so a
+        duplicate-key source inserts both rows, exactly Delta's
+        semantics. Tombstones and post-images derive from ONE
+        materialized matched frame, the same pinning as
+        ``update_where``."""
         cur = self.current_version()
         m = (
             load_manifest(self.root, cur)
             if cur > 0
             else {"files": [], "dv": {}, "schema": None}
         )
-        src = source
-        for c in src.columns:
-            src = src.withColumnRenamed(c, f"__src_{c}")
-        key_cond = [
-            F.col(k) == F.col(f"__src_{k}") for k in on
-        ]
-        # a Column here is a CONDITION on the insert branch (truthiness
-        # on a Column raises, so the flag and the condition are split)
-        ins_on = insert_not_matched is not False and (
-            insert_not_matched is not None
+        src = source.withColumnsRenamed(
+            {c: f"__src_{c}" for c in source.columns}
         )
-        ins_cond = (
-            insert_not_matched
-            if ins_on and insert_not_matched is not True
-            else None
-        )
+        key_cond = [F.col(k) == F.col(f"__src_{k}") for k in on]
+        ins_filter = _clause_filter(insert_not_matched)
+        nmbs_filter = _clause_filter(when_not_matched_by_source_delete)
         # strict schema enforcement: the insert branch is merge_mor's
         # one schema-extending path — reject source columns the table
         # does not have BEFORE any work (no-op under additive mode)
-        if ins_on:
+        if ins_filter is not None:
             self._enforce_schema(m, source)
         if not m["files"]:
-            if ins_on:
-                # identity columns apply on the empty-table fast path
-                # exactly as on the non-empty insert branch: the source
-                # must omit them (GENERATED ALWAYS) and the engine
-                # assigns from the registered watermark — _publish then
-                # advances it from the written footers
-                ident_all = m.get("identity") or {}
-                for c in ident_all:
-                    if f"__src_{c}" in src.columns:
-                        raise ValueError(
-                            f"{c!r} is GENERATED ALWAYS AS IDENTITY — "
-                            "the engine assigns it; omit it from the "
-                            "source"
-                        )
-                ins_src = src
-                if ins_cond is not None:
-                    ins_src = ins_src.filter(
-                        ins_cond.eqNullSafe(F.lit(True))
-                    )
-                ins = ins_src.select(
-                    *[
-                        F.col(f"__src_{c}").alias(c)
-                        for c in source.columns
-                    ]
-                )
-                for c, meta in ident_all.items():
-                    step = int(meta["step"])
-                    ins = ins.withColumn(
-                        c,
-                        (
-                            F.lit(int(meta["high"]) + step)
-                            + F.lit(step)
-                            * F.monotonically_increasing_id()
-                        ).cast("long"),
-                    )
-                new = self._write_files(ins)
-                # empty-table insert branch, rebase-aware: a racing
-                # first append must not be dropped by publishing the
-                # insert files alone
-                return self._publish_with_rebase(
-                    m,
-                    cur,
-                    new,
-                    op="MERGE",
-                    txn_update=txn_update,
-                )
-            if txn_update:
-                # empty no-op epoch: the idempotence watermark must
-                # still advance atomically (a replay would otherwise
-                # re-run forever on restart loops)
-                return self._publish(
-                    m["files"], cur, m.get("stats") or {},
-                    txn_update=txn_update, op="MERGE",
-                )
-            return cur
-        track = bool(m.get("row_tracking"))
-        import time as _mtime
-
-        MERGE_METRICS.clear()
-        # Delta's MERGE file pruning: a file whose banked key range
-        # cannot intersect the SOURCE's key hull provably holds no
-        # matched row, no ambiguous key, and no key the insert
-        # anti-join could collide with — it skips the staged scan
-        # entirely and rides the manifest untouched. Disabled when NOT
-        # MATCHED BY SOURCE is on (that branch must see every target
-        # row); absent stats keep their files (zone_prune is
-        # conservative). A merge touching 0.1% of a 100 TB table now
-        # reads ~0.1% of it.
-        _ph0 = _mtime.perf_counter()
-        cand_files = m["files"]
-        aliased_keys = set(on)
-        for ent in m.get("schema") or []:
-            if ent["name"] in set(on):
-                aliased_keys |= set(ent.get("prior", []))
-        stats_cover_keys = any(
-            k in st for st in m["stats"].values() for k in aliased_keys
-        )
-        if stats_cover_keys and (
-            when_not_matched_by_source_delete is None
-            or when_not_matched_by_source_delete is False
-        ):
-            # computing the source hull costs one extra evaluation of
-            # the source — only worth it when at least one file banks
-            # stats for a merge key (otherwise nothing can prune)
-            hull = src.agg(
-                *[
-                    F.min(f"__src_{k}").alias(f"__lo_{i}")
-                    for i, k in enumerate(on)
-                ],
-                *[
-                    F.max(f"__src_{k}").alias(f"__hi_{i}")
-                    for i, k in enumerate(on)
-                ],
-            ).collect()[0]
-            bounds = {}
-            for i, k in enumerate(on):
-                lo = _json_scalar_value(hull[f"__lo_{i}"])
-                hi = _json_scalar_value(hull[f"__hi_{i}"])
-                if lo is not None or hi is not None:
-                    bounds[k] = (lo, hi)
-            if bounds:
-                aliases = {}
-                for ent in m.get("schema") or []:
-                    if ent["name"] in bounds and ent.get("prior"):
-                        aliases[ent["name"]] = list(ent["prior"])
-                cand_files = zone_prune(
-                    m["files"], m["stats"], bounds, aliases
-                )
-                if not cand_files:
-                    # nothing can match: one arbitrary file keeps the
-                    # frames non-degenerate (provably matchless — the
-                    # joins yield nothing from it)
-                    cand_files = m["files"][:1]
-        MERGE_METRICS["files_total"] = len(m["files"])
-        MERGE_METRICS["files_scanned"] = len(cand_files)
-        MERGE_METRICS["source_hull_sec"] = round(
-            _mtime.perf_counter() - _ph0, 3
-        )
-        visible = self._masked_read(
-            cand_files, m["dv"], keep_provenance=track, manifest=m
-        )
-        if track:
-            visible = visible.drop("__fp", "__pos")
-        tagged = visible.withColumns(
-            {
-                "__dv_file": self._plain_path(
-                    F.col("_metadata.file_path")
-                ),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
-        )
-        keep = ("__dv_file", "__dv_pos") + (
-            (ROW_ID_COL,)
-            if track and ROW_ID_COL in tagged.columns
-            else ()
-        )
-        mapped = self._apply_schema_map(tagged, m["schema"], keep=keep)
-        for c in m.get("identity") or {}:
-            if when_matched_update and c in when_matched_update:
-                raise ValueError(
-                    f"{c!r} is GENERATED ALWAYS AS IDENTITY — an "
-                    "UPDATE clause cannot assign it"
-                )
-        joined = mapped.join(src, key_cond, "inner")
-        del_cond = (
-            when_matched_delete.eqNullSafe(F.lit(True))
-            if when_matched_delete is not None
-            else F.lit(False)
-        )
+            # every source row is not-matched: the insert branch alone,
+            # no target scan
+            if ins_filter is None:
+                return self._merge_noop(m, cur, txn_update)
+            new = self._write_files(
+                self._merge_inserts(src, source.columns, ins_filter, m)
+            )
+            # rebase-aware: a racing first append must not be dropped
+            # by publishing the insert files alone
+            return self._publish_with_rebase(
+                m, cur, new, op="MERGE", txn_update=txn_update
+            )
         if (
             when_matched_update_condition is not None
             and when_matched_update is None
@@ -2927,313 +2896,179 @@ class SnapshotTable:
                 "when_matched_update_condition requires "
                 "when_matched_update assignments"
             )
-        upd_cond = (
-            F.lit(False)
+        for c in m.get("identity") or {}:
+            if c in (when_matched_update or {}):
+                raise ValueError(
+                    f"{c!r} is GENERATED ALWAYS AS IDENTITY — an "
+                    "UPDATE clause cannot assign it"
+                )
+        del_filter = _clause_filter(when_matched_delete)
+        upd_filter = (
+            None
             if when_matched_update is None
-            else (
-                when_matched_update_condition.eqNullSafe(F.lit(True))
-                if when_matched_update_condition is not None
-                else F.lit(True)
+            else _clause_filter(
+                True
+                if when_matched_update_condition is None
+                else when_matched_update_condition
             )
         )
-        has_matched_clauses = (
-            when_matched_delete is not None
-            or when_matched_update is not None
-        )
-        _ph0 = _mtime.perf_counter()
-        if has_matched_clauses:
-            # ONE full-table pass (round-11: it also serves the ambiguity
-            # guard below, which previously paid its own semi-join scan of
-            # the masked table) detects and MATERIALIZES every matched row
-            # with its clause outcomes pinned as boolean columns
-            # (localCheckpoint, O(matched rows) storage): the ambiguity
-            # count, tombstones AND post-images all derive from this one
-            # frame, so the table is never re-scanned for them, and
-            # nondeterministic clause conditions are evaluated exactly
-            # once (the flags cross the barrier as data).
-            matched = joined.withColumns(
-                {"__is_del": del_cond, "__is_upd": upd_cond}
-            ).localCheckpoint(eager=True)
-            touched = matched.filter(
-                F.col("__is_del") | F.col("__is_upd")
-            ).drop("__is_upd")
-        else:
-            # insert-only merge: nothing downstream needs the matched
-            # rows, so no materialization — the ambiguity guard keeps
-            # the pre-r11 standalone semi-join shape (same cost class
-            # as before; this path's behavior is unchanged)
-            matched = None
-            touched = joined.filter(F.lit(False)).withColumn(
-                "__is_del", F.lit(False)
+        MERGE_METRICS.clear()
+        with _merge_phase("source_hull_sec"):
+            # NOT MATCHED BY SOURCE must see every target row
+            cand_files = (
+                self._merge_candidates(m, src, on)
+                if nmbs_filter is None
+                else m["files"]
             )
-        MERGE_METRICS["detect_matched_sec"] = round(
-            _mtime.perf_counter() - _ph0, 3
-        )
-        _ph0 = _mtime.perf_counter()
-        # ambiguity guard (Delta's multiple-matches error): >1 source row
-        # MATCHING one target row. With matched clauses the count comes
-        # from the already-materialized matched frame — a target row is
-        # (__dv_file, __dv_pos) — so the guard costs a KB-scale aggregate
-        # instead of a second masked-table scan. Matching follows the
-        # merge join itself (`=`): NULL join keys never match, so they
-        # cannot be ambiguous — Delta's semantics (the pre-r11 standalone
-        # check used a null-safe probe and could raise for null-key rows
-        # the merge would never touch; the insert-only path retains it).
-        touched_files: list | None = None
-        if matched is not None:
-            # one job serves BOTH driver-side facts the merge needs from
-            # the checkpoint: the per-(file,pos) match multiplicity (the
-            # ambiguity guard) and the distinct files carrying a clause
-            # hit (the affected-file set the rewrite pass scans). Rows
-            # collected = distinct files among matched rows — metadata
-            # scale, bounded by the table's file count.
-            stats = (
-                matched.groupBy("__dv_file", "__dv_pos")
-                .agg(
-                    F.count(F.lit(1)).alias("__c"),
-                    F.max(
-                        F.col("__is_del") | F.col("__is_upd")
-                    ).alias("__t"),
-                )
-                .groupBy("__dv_file")
-                .agg(
-                    F.max("__c").alias("__maxc"),
-                    F.max("__t").alias("__any_t"),
-                )
-                .collect()
+        MERGE_METRICS["files_total"] = len(m["files"])
+        MERGE_METRICS["files_scanned"] = len(cand_files)
+        mapped = self._tagged_scan(m, cand_files)
+        tcols = self._target_cols(mapped)
+        inserts = None
+        if ins_filter is not None:
+            # one column-pruned anti-join pass (lazy: a supplied
+            # identity column raises here, before anything stages)
+            inserts = self._merge_inserts(
+                src.join(mapped.select(*on), key_cond, "left_anti"),
+                source.columns,
+                ins_filter,
+                m,
+                [f for f in mapped.schema.fields if f.name in tcols],
             )
-            ambiguous = any(r["__maxc"] > 1 for r in stats)
-            touched_files = [
-                r["__dv_file"] for r in stats if r["__any_t"]
-            ]
-        else:
-            # insert-only merge: CANNOT be ambiguous under Delta's
-            # semantics — "multiple matches" only matters when a matched
-            # clause would apply two source rows to one target row, and
-            # an insert-only merge ignores matched rows entirely
-            # (duplicate not-matched source rows simply both insert,
-            # exactly like Delta). Dropping the pre-r12 standalone
-            # null-safe probe removes a source aggregation, a masked-
-            # table semi-join scan and a limit(1).count() driver job
-            # from every insert-only merge (r12, ADVICE-r11; guide §5 —
-            # driver round-trips are jobs). It also aligns the two
-            # paths' null-key behavior: null-key source duplicates
-            # never raise on either path now (the merge join's `=`
-            # matching never touches them) — pinned by
-            # tests/test_round12_opt.py.
-            ambiguous = False
-        if ambiguous:
-            raise ValueError(
-                "merge_mor: multiple source rows match a single "
-                "target row on " + str(on) + " — deduplicate the "
-                "source first (the merge would be ambiguous)"
-            )
-        MERGE_METRICS["ambiguity_check_sec"] = round(
-            _mtime.perf_counter() - _ph0, 3
-        )
-        _ph0 = _mtime.perf_counter()
-        tomb = touched.select("__dv_file", "__dv_pos")
-        if (
-            when_not_matched_by_source_delete is not None
-            and when_not_matched_by_source_delete is not False
-        ):
-            # target rows absent from the source: one anti-join on the
-            # merge keys (the same shuffle family as the merge itself).
-            # False = branch disabled, like None (the flag/condition
-            # split mirrors insert_not_matched's ins_on handling —
-            # truthiness on a Column raises, so identity checks gate)
-            nmbs = mapped.join(src, key_cond, "left_anti")
-            if when_not_matched_by_source_delete is not True:
-                nmbs = nmbs.filter(
-                    when_not_matched_by_source_delete.eqNullSafe(
-                        F.lit(True)
+        matched = None
+        with _merge_phase("detect_matched_sec"):
+            if del_filter is not None or upd_filter is not None:
+                # ONE pass detects and MATERIALIZES every matched row
+                # with its clause outcomes pinned as boolean columns
+                # (localCheckpoint, O(matched rows) storage): the
+                # ambiguity count, tombstones AND post-images all
+                # derive from this one frame, so the table is never
+                # re-scanned for them, and nondeterministic clause
+                # conditions are evaluated exactly once (the flags
+                # cross the barrier as data).
+                no = F.lit(False)
+                matched = (
+                    mapped.join(src, key_cond, "inner")
+                    .withColumns(
+                        {
+                            "__is_del": no if del_filter is None
+                            else del_filter,
+                            "__is_upd": no if upd_filter is None
+                            else upd_filter,
+                        }
                     )
+                    .localCheckpoint(eager=True)
                 )
-            tomb = tomb.unionAll(
-                nmbs.select("__dv_file", "__dv_pos")
+        touched_files: list[str] | None = []
+        with _merge_phase("ambiguity_check_sec"):
+            # Delta's multiple-matches error: >1 source row MATCHING one
+            # target row (__fp, __pos). Matching follows the merge join
+            # itself (`=`): NULL join keys never match, so they cannot
+            # be ambiguous. An insert-only merge ignores matched rows
+            # entirely, so it cannot be ambiguous. One job over the
+            # checkpoint serves both driver-side facts: the per-row
+            # match multiplicity and the distinct files carrying a
+            # clause hit (rows collected = distinct matched files).
+            if matched is not None:
+                stats = (
+                    matched.groupBy(*_PROVENANCE)
+                    .agg(
+                        F.count(F.lit(1)).alias("__c"),
+                        F.max(
+                            F.col("__is_del") | F.col("__is_upd")
+                        ).alias("__t"),
+                    )
+                    .groupBy("__fp")
+                    .agg(
+                        F.max("__c").alias("__maxc"),
+                        F.max("__t").alias("__any_t"),
+                    )
+                    .collect()
+                )
+                if any(r["__maxc"] > 1 for r in stats):
+                    raise ValueError(
+                        "merge_mor: multiple source rows match a single "
+                        "target row on " + str(on) + " — deduplicate "
+                        "the source first (the merge would be ambiguous)"
+                    )
+                touched_files = [r["__fp"] for r in stats if r["__any_t"]]
+        with _merge_phase("sidecar_write_sec"):
+            tomb = (
+                None
+                if matched is None
+                else matched.filter(
+                    F.col("__is_del") | F.col("__is_upd")
+                ).select(*_PROVENANCE)
             )
-        dvdir = os.path.join(self.root, "deletes", _uuid.uuid4().hex)
-        tomb.write.mode(
-            "errorifexists"
-        ).parquet(dvdir)
-        if (
-            when_not_matched_by_source_delete is not None
-            and when_not_matched_by_source_delete is not False
-        ):
-            # the NMBS anti-join is NOT materialized: the written
-            # sidecar is its single evaluation, so the affected-file
-            # set must come from reading it back
-            affected = [
-                r["__dv_file"]
-                for r in self.spark.read.parquet(dvdir)
-                .select("__dv_file")
-                .distinct()
-                .collect()
-            ]
-        else:
-            # every tombstone derives from the materialized touched
-            # frame, whose distinct-file set already rode the ambiguity
-            # aggregate above — zero extra jobs here (insert-only merges
-            # have no matched rows, so no files are affected)
-            affected = touched_files if touched_files is not None else []
-        MERGE_METRICS["sidecar_write_sec"] = round(
-            _mtime.perf_counter() - _ph0, 3
-        )
-        target_cols = [
-            c for c in mapped.columns
-            if c not in ("__dv_file", "__dv_pos", ROW_ID_COL)
-        ]
-        # post-images: derived from the MATERIALIZED touched frame (the
-        # same rows the sidecar was written from — one pass, pinned)
+            if nmbs_filter is not None:
+                # target rows absent from the source: one anti-join on
+                # the merge keys (the same shuffle family as the merge
+                # itself), NOT materialized — the written sidecar is
+                # its single evaluation, so the affected-file set comes
+                # from reading it back
+                nmbs = (
+                    mapped.join(src, key_cond, "left_anti")
+                    .filter(nmbs_filter)
+                    .select(*_PROVENANCE)
+                )
+                tomb = nmbs if tomb is None else tomb.unionAll(nmbs)
+                touched_files = None
+            dvdir, affected = self._stage_tombstones(tomb, touched_files)
         post = None
         if when_matched_update is not None:
-            # GENERATED columns the update clause didn't explicitly
-            # assign are dropped so the write path recomputes them from
-            # the updated inputs (same recompute rule as update_where);
-            # explicitly-assigned ones stay and are `<=>`-validated.
-            regen = {
-                g
-                for g in self._generated()
-                if g in target_cols and g not in when_matched_update
-            }
-            # __is_del is the clause outcome pinned AT the checkpoint
-            # (round-11): filtering on it cannot disagree with the
-            # tombstone set even for a nondeterministic delete condition
-            pre = touched.filter(~F.col("__is_del"))
-            out_cols = [c for c in target_cols if c not in regen]
-            if track:
-                # row tracking: the post-image keeps the pre-image's
-                # permanent id (an UPDATE branch changes values, not
-                # identity — same rule as update_where)
-                bases = self._row_id_bases(m).withColumnRenamed(
-                    "__fp", "__dv_file"
-                )
-                pre = pre.join(F.broadcast(bases), "__dv_file", "left")
-                fresh = (
-                    F.col("__rid_base") + F.col("__dv_pos")
-                ).cast("long")
-                idc = (
-                    F.coalesce(F.col(ROW_ID_COL).cast("long"), fresh)
-                    if ROW_ID_COL in pre.columns
-                    else fresh
-                )
-                pre = pre.withColumn(ROW_ID_COL, idc)
-                out_cols = out_cols + [ROW_ID_COL]
-            post = (
-                pre.withColumns(when_matched_update)
-                .select(*out_cols)
+            # __is_del is the clause outcome pinned AT the checkpoint:
+            # filtering on it cannot disagree with the tombstone set
+            # even for a nondeterministic delete condition
+            post = self._post_images(
+                matched.filter(F.col("__is_upd") & ~F.col("__is_del")),
+                m,
+                when_matched_update,
+                tcols,
             )
-        inserts = None
-        if ins_on:
-            # one column-pruned anti-join pass; materialized so the
-            # emptiness probe and the file write share the evaluation
-            # (and identity-id assignment happens exactly once)
-            unmatched = src.join(
-                mapped.select(*on), key_cond, "left_anti"
-            )
-            if ins_cond is not None:
-                unmatched = unmatched.filter(
-                    ins_cond.eqNullSafe(F.lit(True))
-                )
-            inserts = unmatched.select(
-                *[
-                    F.col(f"__src_{c}").alias(c)
-                    for c in source.columns
-                ]
-            )
-            # align to the target's logical schema: target columns the
-            # source omits surface as typed NULLs (the pre-merge rows'
-            # types, not string-inferred) — EXCEPT generated columns
-            # (stay absent so the write path computes them from the
-            # aligned inputs instead of validating a NULL) and DEFAULT
-            # columns (stay absent so the write path fills the default
-            # — a MERGE INSERT omitting a defaulted column must get the
-            # default, not a NULL)
-            gens_all = self._generated()
-            dfl_all = self._defaults()
-            ident_all = m.get("identity") or {}
-            for f in mapped.schema.fields:
-                if f.name in ("__dv_file", "__dv_pos", ROW_ID_COL):
-                    continue  # inserts draw FRESH ids from their range
-                if f.name not in inserts.columns and f.name not in (
-                    gens_all.keys() | dfl_all.keys() | ident_all.keys()
-                ):
-                    inserts = inserts.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
-            # identity columns: MERGE inserts draw engine-assigned ids
-            # from the head watermark, the same map-side expression as
-            # commit_append (a racing watermark advance conflicts this
-            # merge's single exclusive publish — the retry re-reads)
-            for c, meta in ident_all.items():
-                if f"__src_{c}" in src.columns:
-                    raise ValueError(
-                        f"{c!r} is GENERATED ALWAYS AS IDENTITY — the "
-                        "engine assigns it; omit it from the source"
-                    )
-                step = int(meta["step"])
-                inserts = inserts.withColumn(
-                    c,
-                    (
-                        F.lit(int(meta["high"]) + step)
-                        + F.lit(step) * F.monotonically_increasing_id()
-                    ).cast("long"),
-                )
+        if inserts is not None:
+            # materialized so the emptiness probe and the file write
+            # share one evaluation (identity ids are assigned once)
             inserts = inserts.localCheckpoint(eager=True)
-        # The update and insert branches write SEPARATELY: after the
-        # generated-column drop their column sets can differ (post
-        # recomputes a gen column the source happens to supply, or vice
-        # versa), and a unioned write would surface NULLs for the
-        # missing side and fail the writer-side validation. Each branch
-        # passes through the same `_write_files` choke point, both file
-        # lists land in the one atomic manifest. Both derive from
-        # materialized frames, so the emptiness probes cost no re-scan.
-        _ph0 = _mtime.perf_counter()
-        parts = [
-            p
-            for p in (post, inserts)
-            if p is not None and p.limit(1).count() > 0
-        ]
-        if not affected and not parts:
-            if txn_update:
-                return self._publish(
-                    m["files"], cur, m.get("stats") or {},
-                    txn_update=txn_update, op="MERGE",
-                )
-            return cur  # nothing matched, nothing to insert
-        new: list[str] = []
-        for p in parts:
-            new += self._write_files(p)
-        MERGE_METRICS["post_insert_write_sec"] = round(
-            _mtime.perf_counter() - _ph0, 3
-        )
+        with _merge_phase("post_insert_write_sec"):
+            # The update and insert branches write SEPARATELY: after the
+            # generated-column drop their column sets can differ (post
+            # recomputes a gen column the source happens to supply, or
+            # vice versa), and a unioned write would surface NULLs for
+            # the missing side and fail the writer-side validation. Both
+            # file lists land in the one atomic manifest. Both derive
+            # from materialized frames, so the emptiness probes cost no
+            # re-scan.
+            parts = [
+                p
+                for p in (post, inserts)
+                if p is not None and p.limit(1).count() > 0
+            ]
+            if not affected and not parts:
+                return self._merge_noop(m, cur, txn_update)
+            new = [f for p in parts for f in self._write_files(p)]
         # only the insert branch can extend the schema (post-images
         # project a subset of the existing target columns)
         sm = (
             self._extend_schema_map(m, inserts)
-            if inserts is not None and any(p is inserts for p in parts)
+            if any(p is inserts for p in parts)
             else _UNSET
         )
-        _ph0 = _mtime.perf_counter()
-        # write-serializable rebase (as in delete/update): the MERGE
-        # serializes before a concurrent pure append — a key both
-        # insert is the append's concern under that order, exactly
-        # Delta's blind-append allowance under WriteSerializable
-        v_out = self._publish_with_rebase(
-            m,
-            cur,
-            new,
-            dv_sidecar=dvdir if affected else None,
-            affected=affected,
-            schema_map=sm,
-            op="MERGE",
-            types=self._merged_types(m, *parts),
-            txn_update=txn_update,
-        )
-        MERGE_METRICS["publish_sec"] = round(
-            _mtime.perf_counter() - _ph0, 3
-        )
-        return v_out
+        with _merge_phase("publish_sec"):
+            # write-serializable rebase (as in delete/update): the MERGE
+            # serializes before a concurrent pure append — a key both
+            # insert is the append's concern under that order, exactly
+            # Delta's blind-append allowance under WriteSerializable
+            return self._publish_with_rebase(
+                m,
+                cur,
+                new,
+                dv_sidecar=dvdir,
+                affected=affected,
+                schema_map=sm,
+                op="MERGE",
+                types=self._merged_types(m, *parts),
+                txn_update=txn_update,
+            )
 
     def materialize_deletes(self) -> int:
         """Fold accumulated deletion vectors into rewritten files (the
@@ -3795,13 +3630,13 @@ class SnapshotTable:
         }
 
     def rewrite_physical(self) -> dict[str, int]:
-        """``OPTIMIZE ... REWRITE PHYSICAL`` — one-time physical rebind
-        (VERDICT-r10 directive #4): rewrite every live file whose
-        PHYSICAL shape has drifted from the current logical schema, then
-        publish a manifest with NO schema map — after which the table's
-        physical and logical schemas are identical again and
-        ``register_bucketed_view`` serves cases it must otherwise
-        refuse. A file is rewritten when it
+        """``OPTIMIZE ... REWRITE PHYSICAL`` — one-time physical rebind:
+        rewrite every live file whose PHYSICAL shape has drifted from
+        the current logical schema, then publish a manifest with NO
+        schema map — after which the table's physical and logical
+        schemas are identical again and ``register_bucketed_view``
+        serves cases it must otherwise refuse. A file is rewritten when
+        it
 
         * carries a PRIOR physical name of a live field (pre-rename
           era) or any bytes of a DROPPED field (purged, Delta's
@@ -3900,19 +3735,13 @@ class SnapshotTable:
                 self._masked_read(targets, m["dv"], manifest=m),
                 m["schema"],
             )
-            # a cluster.by table's replacement files re-sort along the
-            # declared Morton key, so the rewrite never degrades the
-            # zone-map locality the layout exists for (bucket.by and
-            # cluster.by are mutually exclusive, and _write_files
-            # rejects order_within on bucketed tables)
-            order_within = None
-            cb = (m.get("properties") or {}).get("cluster.by")
-            if cb and self._bucket_spec() is None:
-                cb_cols = [
-                    c.strip() for c in str(cb).split(",") if c.strip()
-                ]
-                if 2 <= len(cb_cols) <= 4:
-                    order_within = self._z_order_within(rows, *cb_cols)
+            # a cluster.by table's replacement files lay out along the
+            # declared Morton key exactly as an append does, one curve
+            # segment per rewritten file, so the rewrite never degrades
+            # the zone-map locality the layout exists for
+            rows, order_within, _ = self._cluster_layout(
+                m, rows, n_files=len(targets)
+            )
             new = self._write_files(rows, order_within=order_within)
         visible = keep + new
         stats = self._merged_stats(cur, new, None)

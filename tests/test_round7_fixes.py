@@ -44,7 +44,8 @@ def test_merge_mor_empty_table_assigns_identity(spark):
     rows = {r["rid"] for r in t.read().select("rid").collect()}
     assert None not in rows, "empty-path MERGE inserted NULL identity"
     assert len(rows) == 5
-    assert all((r - 100) % 10 == 0 and r >= 110 for r in rows)
+    # START WITH 100: the first id may be 100 itself (Delta semantics)
+    assert all((r - 100) % 10 == 0 and r >= 100 for r in rows)
     # the watermark advanced: a follow-up append draws HIGHER ids
     t.commit_append(
         spark.range(1).select(F.lit(999).cast("bigint").alias("k"))
@@ -53,6 +54,15 @@ def test_merge_mor_empty_table_assigns_identity(spark):
         t.read().filter(F.col("k") == 999).select("rid").collect()[0][0]
     )
     assert newest > max(rows)
+
+
+def test_merge_mor_empty_table_identity_starts_at_start(spark):
+    t = SnapshotTable(spark, _tmp("mergidexact"))
+    t.add_identity_column("rid", start=100, step=10)
+    src = spark.range(5).coalesce(1).select(F.col("id").alias("k"))
+    t.merge_mor(src, on=["k"])
+    rows = {r["rid"] for r in t.read().select("rid").collect()}
+    assert rows == {100, 110, 120, 130, 140}
 
 
 def test_merge_mor_empty_table_rejects_supplied_identity(spark):
